@@ -963,8 +963,9 @@ def ngram_write_index(
             .write.mode("overwrite")
             .parquet(f"{path}/prefix")
         )
-        # Arrow-built local frame — see util.local_frame: the pickled
-        # default made this one-row coalesce(1) write cost ~5 s
+        # Arrow-built local frame — see util.local_frame: at local[4]
+        # one 8-row coalesce(1) write measured 0.34–0.37 s this way
+        # against 1.25–3.0 s through the pickled createDataFrame default
         from hadoop__spark.operators.util import local_frame
 
         local_frame(

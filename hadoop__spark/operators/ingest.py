@@ -31,6 +31,9 @@ capability built from this package's own tested primitives.
 
 from __future__ import annotations
 
+import contextlib
+import inspect
+
 from pyspark.sql import DataFrame, functions as F
 
 from hadoop__spark.operators.dedup import (
@@ -192,42 +195,117 @@ def _detect_plane(spark, state_dir: str) -> str | None:
     return None
 
 
-class _maintenance_lock:
-    """Context manager: exclusively create the state's maintenance
-    lock file, refusing when another run holds it OR an ingest is
-    mid-flight (two-sided advisory locking; see _INGEST_MARKER);
-    always released."""
+@contextlib.contextmanager
+def _maintenance_lock(spark, state_dir: str, op: str):
+    """Hold the state's maintenance lock for maintenance verb ``op``,
+    fsck-first: exclusively create the lock file, refusing when
+    another run holds it OR an ingest is mid-flight (two-sided
+    advisory locking; see _INGEST_MARKER); then repair any crashed
+    stage (:func:`fsck_state`) BEFORE the verb reads the snapshot set,
+    and REFUSE while anything needs a rebuild.  Yields the fsck
+    report; the lock is released on every path, a refusal included.
 
-    def __init__(self, spark, state_dir: str):
-        self.spark = spark
-        self.state_dir = state_dir
-        self.path = f"{state_dir}/{_MAINT_LOCK}"
+    Without the fsck pass the maintenance verbs compose unsafely
+    across a crash: :func:`coalesce_snapshots` would merge a
+    mid-surgery snapshot (transient duplicates, retracted ids still
+    present) into an epoch and delete the source — after which fsck
+    SWEEPS the committed surgery stage (its ``batches/{name}`` no
+    longer exists), baking the duplicates in and silently undoing the
+    takedown; symmetrically, :func:`retract_documents` run between a
+    coalesce crash and its fsck would do surgery on the partial
+    snapshot set, and the later fsck would adopt the PRE-retraction
+    staged epoch, resurrecting the retracted ids with no marker left
+    to flag it; and :func:`rebuild_sketch_states` would count a
+    mid-surgery snapshot's duplicate rows into ``group_counts``.
+    Repair-first closes every direction; the refusal mirrors
+    :func:`_retract_fast`'s marker check (a half-applied fast
+    retraction only reconsolidates through a rebuild)."""
+    from hadoop__spark.operators.util import create_exclusive
 
-    def __enter__(self):
-        from hadoop__spark.operators.util import create_exclusive
-
-        if not create_exclusive(self.spark, self.path):
-            raise RuntimeError(
-                f"maintenance lock {self.path} is held — another "
-                "compact/retract run is active (or crashed and left it "
-                "stale; delete the file after confirming nothing runs)"
-            )
+    lock = f"{state_dir}/{_MAINT_LOCK}"
+    if not create_exclusive(spark, lock):
+        raise RuntimeError(
+            f"maintenance lock {lock} is held — another "
+            "compact/retract run is active (or crashed and left it "
+            "stale; delete the file after confirming nothing runs)"
+        )
+    try:
         # own flag first, then the other side's — if an ingest slipped
         # in between our existence check and our create, one of us
         # sees the other and backs off
-        if _table_exists(self.spark, f"{self.state_dir}/{_INGEST_MARKER}"):
-            _delete_path(self.spark, self.path)
+        if _table_exists(spark, f"{state_dir}/{_INGEST_MARKER}"):
             raise RuntimeError(
-                f"an ingest_batch run is in flight on {self.state_dir} "
+                f"an ingest_batch run is in flight on {state_dir} "
                 f"({_INGEST_MARKER} present) — retry after it completes "
                 "(a crashed ingest leaves the marker stale; "
                 "rebuild_state clears it, or delete the file by hand)"
             )
-        return self
+        report = _fsck_state_locked(spark, state_dir)
+        if report["needs_rebuild"]:
+            raise RuntimeError(
+                f"{op} on {state_dir} refused: a crashed fast retraction "
+                f"left {sorted(report['needs_rebuild'])} needing a "
+                f"rebuild — running {op} now would bake its partial "
+                "mutations into the state; run rebuild_state first (it "
+                "reconsolidates every table and clears the markers)"
+            )
+        yield report
+    finally:
+        _delete_path(spark, lock)
 
-    def __exit__(self, *exc):
-        _delete_path(self.spark, self.path)
-        return False
+
+@contextlib.contextmanager
+def _ingest_in_progress(spark, state_dir: str):
+    """Hold :func:`ingest_batch`'s in-progress marker for the body of
+    one ingest: refuse while a maintenance run holds its lock (checked
+    before AND after planting our own flag — two-sided advisory
+    locking, see _INGEST_MARKER), refuse a concurrent ingest, and on
+    every exit release this call's probe caches and the marker."""
+    from hadoop__spark.operators.util import create_exclusive
+
+    def refuse_under_maintenance():
+        if _table_exists(spark, f"{state_dir}/{_MAINT_LOCK}"):
+            # a compact/retract run is deleting-and-swapping the
+            # tables this ingest would read and append — refuse
+            # loudly instead of racing the swap (advisory; see
+            # _MAINT_LOCK)
+            raise RuntimeError(
+                f"state at {state_dir} is under maintenance "
+                f"({_MAINT_LOCK} present) — retry after it completes, "
+                "or delete a stale lock by hand"
+            )
+
+    refuse_under_maintenance()
+    marker = f"{state_dir}/{_INGEST_MARKER}"
+    if not create_exclusive(spark, marker):
+        raise RuntimeError(
+            f"another ingest_batch run is in flight on {state_dir} "
+            f"({_INGEST_MARKER} present) — two concurrent ingests "
+            "would race the state appends; retry after it completes "
+            "(a crashed ingest leaves the marker stale — rebuild_state "
+            "clears it, or delete the file by hand)"
+        )
+    try:
+        # re-check after planting our flag: a maintenance run may have
+        # taken the lock between our first check and our create — each
+        # side checks the other's flag AFTER its own, so the two can
+        # never both proceed (both backing off is fine)
+        refuse_under_maintenance()
+        yield
+    finally:
+        # release the probe caches THIS call accumulated: the
+        # survivors and every state append are already durable (the
+        # returned frame reads the snapshot, not the probe chain), and
+        # CacheManager entries otherwise accrue per batch — every
+        # query compile scans all of them, so a long-lived streaming
+        # driver slows down per micro-batch (measured 20 s → 87 s per
+        # identical batch over 120 ingests; tools/cadence_rehearsal.py)
+        from hadoop__spark.operators.dedup import release_probe_caches
+
+        # scoped to THIS session: a concurrent pipeline on another
+        # session in the same process keeps its own probe caches
+        release_probe_caches(spark)
+        _delete_path(spark, marker)
 
 
 # ---------------------------------------------------------------------------
@@ -238,34 +316,59 @@ class _maintenance_lock:
 # (the documented "use the same policy on every batch" contract, now
 # refused instead of trusted).
 
-_POLICY_SCHEMA = (
-    "text_method STRING, n INT, num_perm INT, threshold DOUBLE, "
-    "max_hamming INT, n_chunks INT, bands INT, "
-    "has_quality_gate BOOLEAN, group_cap_col STRING, group_cap_k INT, "
-    "accounting_col STRING, has_embeddings BOOLEAN, "
-    "semantic_threshold DOUBLE"
+# (field, parquet type, refused on drift) — the ONE declaration of the
+# stored policy row; its schema and the drift check derive from it.
+# Refused: the structural parameters that shape the stored state, plus
+# the presence/identity of each policy state (a batch ingested without
+# keep_frac/group_cap/accounting silently under-counts those states; a
+# batch without embeddings leaves the IVF index blind to its vectors).
+# The rest (bands, max_hamming, n_chunks, semantic_threshold) are
+# query-time probe knobs: recorded for observability, drift allowed.
+_POLICY = (
+    ("text_method", "STRING", True),
+    ("n", "INT", True),
+    ("num_perm", "INT", True),
+    ("threshold", "DOUBLE", True),
+    ("max_hamming", "INT", False),
+    ("n_chunks", "INT", False),
+    ("bands", "INT", False),
+    ("has_quality_gate", "BOOLEAN", True),
+    ("group_cap_col", "STRING", True),
+    ("group_cap_k", "INT", True),
+    ("accounting_col", "STRING", True),
+    ("has_embeddings", "BOOLEAN", True),
+    ("semantic_threshold", "DOUBLE", False),
 )
-_POLICY_FIELDS = [f.split()[0] for f in _POLICY_SCHEMA.split(", ")]
-# refused on drift (structural parameters that shape the stored state,
-# plus the presence/identity of each policy state — a batch ingested
-# without keep_frac/group_cap/accounting silently under-counts those
-# states; a batch without embeddings leaves the IVF index blind to its
-# vectors).  The rest (bands, max_hamming, n_chunks,
-# semantic_threshold) are query-time probe knobs: recorded for
-# observability, drift allowed.
-_POLICY_ENFORCED = (
-    "text_method", "n", "num_perm", "threshold", "has_quality_gate",
-    "group_cap_col", "group_cap_k", "accounting_col", "has_embeddings",
-)
+_POLICY_SCHEMA = ", ".join(f"{f} {t}" for f, t, _ in _POLICY)
+
+
+def _policy_row(
+    text_method: str, n: int, num_perm: int, threshold: float, **rest
+) -> dict:
+    """The stored-policy row for a call's structural parameters (each
+    text plane stores only the knobs it uses, the others as None) plus
+    the ``rest`` fields as given; fields left out are stored NULL."""
+    return {
+        "text_method": text_method,
+        "n": int(n),
+        "num_perm": int(num_perm) if text_method == "minhash" else None,
+        "threshold": (
+            float(threshold)
+            if text_method in ("minhash", "ngram")
+            else None
+        ),
+        **rest,
+    }
 
 
 def _write_policy(spark, state_dir: str, pol: dict) -> None:
-    # Arrow-built local frame — see util.local_frame: the pickled
-    # default made this one-row coalesce(1) write cost ~5 s per state
+    # Arrow-built local frame — see util.local_frame: at local[4] one
+    # 8-row coalesce(1) write measured 0.34–0.37 s this way against
+    # 1.25–3.0 s through the pickled createDataFrame default
     from hadoop__spark.operators.util import local_frame
 
     local_frame(
-        spark, [tuple(pol.get(f) for f in _POLICY_FIELDS)], _POLICY_SCHEMA
+        spark, [tuple(pol.get(f) for f, _, _ in _POLICY)], _POLICY_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/policy")
 
 
@@ -302,7 +405,9 @@ def _read_policy(spark, state_dir: str) -> dict | None:
 def _policy_drift(stored: dict, current: dict) -> list[str]:
     """Human-readable drift descriptions for the ENFORCED fields."""
     drift = []
-    for f in _POLICY_ENFORCED:
+    for f, _, enforced in _POLICY:
+        if not enforced:
+            continue
         s, c = stored.get(f), current.get(f)
         if isinstance(s, float) and isinstance(c, float):
             if abs(s - c) <= 1e-12:
@@ -791,7 +896,14 @@ def ingest_batch(
     ``text_method`` picks the near-dup TEXT plane: ``"minhash"``
     (default — LSH-banded Jaccard at ``threshold``), ``"simhash"``
     (Hamming ≤ ``max_hamming`` over ``n_chunks`` chunk buckets,
-    :func:`~hadoop__spark.operators.dedup.simhash_pairs_between`), or
+    :func:`~hadoop__spark.operators.dedup.simhash_pairs_between` —
+    APPROXIMATE at the defaults: the chunk buckets guarantee recall
+    only up to Hamming distance ``n_chunks - 1``, so ``max_hamming=6``
+    with ``n_chunks=4`` finds every pair within distance 3 but may
+    miss pairs at 4–6; measured at sf0.1, 18 of 213 true pairs
+    missed.  ``n_chunks=8`` guarantees distance 7 at coarser 8-bit
+    buckets — see :func:`~hadoop__spark.operators.dedup.simhash_pairs`'
+    scale trade-off), or
     ``"ngram"`` (EXACT prefix-filtered Jaccard at ``threshold``,
     :func:`~hadoop__spark.operators.dedup.ngram_jaccard_pairs_between`
     against a frozen-df index that appends per batch).  The method is
@@ -857,481 +969,409 @@ def ingest_batch(
             "text_method must be 'minhash', 'simhash' or 'ngram', "
             f"got {text_method!r}"
         )
-    if _table_exists(spark, f"{state_dir}/{_MAINT_LOCK}"):
-        # a compact/retract run is deleting-and-swapping the tables
-        # this ingest would read and append — refuse loudly instead of
-        # racing the swap (advisory; see _MAINT_LOCK)
-        raise RuntimeError(
-            f"state at {state_dir} is under maintenance "
-            f"({_MAINT_LOCK} present) — retry after it completes, or "
-            "delete a stale lock by hand"
-        )
-    from hadoop__spark.operators.util import create_exclusive
-
-    in_progress = f"{state_dir}/{_INGEST_MARKER}"
-    if not create_exclusive(spark, in_progress):
-        raise RuntimeError(
-            f"another ingest_batch run is in flight on {state_dir} "
-            f"({_INGEST_MARKER} present) — two concurrent ingests "
-            "would race the state appends; retry after it completes "
-            "(a crashed ingest leaves the marker stale — rebuild_state "
-            "clears it, or delete the file by hand)"
-        )
-    try:
-        if _table_exists(spark, f"{state_dir}/{_MAINT_LOCK}"):
-            # re-check after planting our flag: a maintenance run may
-            # have taken the lock between our first check and our
-            # create — each side checks the other's flag AFTER its
-            # own, so the two can never both proceed (two-sided
-            # advisory locking; both backing off is fine)
-            raise RuntimeError(
-                f"state at {state_dir} is under maintenance "
-                f"({_MAINT_LOCK} present) — retry after it completes, "
-                "or delete a stale lock by hand"
-            )
-        return _ingest_batch_inner(
-            spark, state_dir, batch, batch_name, text_col, id_col,
-            text_method, threshold, n, num_perm, bands, max_bucket,
-            max_hamming, n_chunks, scores, score_col, keep_frac,
-            unscored, benchmark, group_cap, embeddings, embedding_col,
-            semantic_threshold, nlist, n_assign, assign, seed,
-            checkpoint_dir, accounting_col, on_existing,
-            allow_policy_change,
-        )
-    finally:
-        # release the probe caches THIS call accumulated: the
-        # survivors and every state append are already durable (the
-        # returned frame reads the snapshot, not the probe chain), and
-        # CacheManager entries otherwise accrue per batch — every
-        # query compile scans all of them, so a long-lived streaming
-        # driver slows down per micro-batch (measured 20 s → 87 s per
-        # identical batch over 120 ingests; tools/cadence_rehearsal.py)
-        from hadoop__spark.operators.dedup import release_probe_caches
-
-        # scoped to THIS session: a concurrent pipeline on another
-        # session in the same process keeps its own probe caches
-        release_probe_caches(spark)
-        _delete_path(spark, in_progress)
-
-
-def _ingest_batch_inner(
-    spark, state_dir, batch, batch_name, text_col, id_col, text_method,
-    threshold, n, num_perm, bands, max_bucket, max_hamming, n_chunks,
-    scores, score_col, keep_frac, unscored, benchmark, group_cap,
-    embeddings, embedding_col, semantic_threshold, nlist, n_assign,
-    assign, seed, checkpoint_dir, accounting_col, on_existing,
-    allow_policy_change,
-) -> DataFrame:
-    """:func:`ingest_batch`'s body, run while the in-progress marker
-    is held (the public wrapper owns acquisition and release)."""
-    batch_path = f"{state_dir}/batches/{batch_name}"
-    if _table_exists(spark, batch_path):
-        # fail FAST (before any dedup compute): a reused name would
-        # overwrite this staging table while the earlier run's state
-        # appends remain — a silent double-append.  With
-        # on_existing="skip" a COMMITTED batch (marker present = every
-        # state append finished) is returned as-is — the idempotent
-        # no-op a foreachBatch retry needs — provided the marker's
-        # coverage includes every plane THIS call's options touch; a
-        # snapshot WITHOUT the marker crashed mid-append and still
-        # refuses (replaying it would double-append — run
-        # rebuild_state first).
-        if on_existing == "skip":
-            covered = _read_commit_marker(spark, batch_path)
-            if covered is not None:
-                required = _required_planes(
-                    keep_frac is not None,
-                    group_cap[0] if group_cap is not None else None,
-                    accounting_col,
-                    embeddings is not None,
-                )
-                missing = required - covered
-                if missing:
-                    raise ValueError(
-                        f"batch {batch_name!r} is committed covering "
-                        f"planes {sorted(covered)}, but this replay "
-                        f"also needs {sorted(missing)} — those state "
-                        "tables are missing the batch's rows (a "
-                        "rebuild omitted the input); rebuild_state "
-                        "with the full inputs first"
+    with _ingest_in_progress(spark, state_dir):
+        batch_path = f"{state_dir}/batches/{batch_name}"
+        if _table_exists(spark, batch_path):
+            # fail FAST (before any dedup compute): a reused name would
+            # overwrite this staging table while the earlier run's state
+            # appends remain — a silent double-append.  With
+            # on_existing="skip" a COMMITTED batch (marker present = every
+            # state append finished) is returned as-is — the idempotent
+            # no-op a foreachBatch retry needs — provided the marker's
+            # coverage includes every plane THIS call's options touch; a
+            # snapshot WITHOUT the marker crashed mid-append and still
+            # refuses (replaying it would double-append — run
+            # rebuild_state first).
+            if on_existing == "skip":
+                covered = _read_commit_marker(spark, batch_path)
+                if covered is not None:
+                    required = _required_planes(
+                        keep_frac is not None,
+                        group_cap[0] if group_cap is not None else None,
+                        accounting_col,
+                        embeddings is not None,
                     )
-                return spark.read.parquet(batch_path)
-        raise ValueError(
-            f"batch {batch_name!r} was already ingested into "
-            f"{state_dir} (staging table exists"
-            + (
-                " without a commit marker — it crashed mid-append; "
-                "rebuild_state, then re-ingest under a new name)"
-                if on_existing == "skip"
-                else "); pick a new name, or pass on_existing='skip' "
-                "for idempotent stream replays"
+                    missing = required - covered
+                    if missing:
+                        raise ValueError(
+                            f"batch {batch_name!r} is committed covering "
+                            f"planes {sorted(covered)}, but this replay "
+                            f"also needs {sorted(missing)} — those state "
+                            "tables are missing the batch's rows (a "
+                            "rebuild omitted the input); rebuild_state "
+                            "with the full inputs first"
+                        )
+                    return spark.read.parquet(batch_path)
+            raise ValueError(
+                f"batch {batch_name!r} was already ingested into "
+                f"{state_dir} (staging table exists"
+                + (
+                    " without a commit marker — it crashed mid-append; "
+                    "rebuild_state, then re-ingest under a new name)"
+                    if on_existing == "skip"
+                    else "); pick a new name, or pass on_existing='skip' "
+                    "for idempotent stream replays"
+                )
             )
+        plane_path, plane_marker = _plane_paths(state_dir, text_method)
+        bootstrap = not _table_exists(spark, f"{state_dir}/fingerprints")
+        if not bootstrap and not _table_exists(spark, plane_marker):
+            # the corpus was bootstrapped under a DIFFERENT text_method —
+            # probing the wrong plane would silently admit near-dups of
+            # everything already ingested
+            raise ValueError(
+                f"state at {state_dir} has no {text_method!r} plane: it was "
+                "built with a different text_method; use the original "
+                "method or rebuild the state"
+            )
+        # persisted-policy consistency — fail FAST, before any compute
+        # (see the docstring's policy paragraph; _POLICY marks the
+        # refused fields)
+        current_pol = _policy_row(
+            text_method, n, num_perm, threshold,
+            max_hamming=int(max_hamming),
+            n_chunks=int(n_chunks),
+            bands=int(bands),
+            has_quality_gate=keep_frac is not None,
+            group_cap_col=group_cap[0] if group_cap is not None else None,
+            group_cap_k=int(group_cap[1]) if group_cap is not None else None,
+            accounting_col=accounting_col,
+            has_embeddings=embeddings is not None,
+            semantic_threshold=float(semantic_threshold),
         )
-    plane_path, plane_marker = _plane_paths(state_dir, text_method)
-    bootstrap = not _table_exists(spark, f"{state_dir}/fingerprints")
-    if not bootstrap and not _table_exists(spark, plane_marker):
-        # the corpus was bootstrapped under a DIFFERENT text_method —
-        # probing the wrong plane would silently admit near-dups of
-        # everything already ingested
-        raise ValueError(
-            f"state at {state_dir} has no {text_method!r} plane: it was "
-            "built with a different text_method; use the original "
-            "method or rebuild the state"
-        )
-    # persisted-policy consistency — fail FAST, before any compute
-    # (see the docstring's policy paragraph; _POLICY_ENFORCED lists
-    # the refused fields)
-    current_pol = {
-        "text_method": text_method,
-        "n": int(n),
-        "num_perm": int(num_perm) if text_method == "minhash" else None,
-        "threshold": (
-            float(threshold)
-            if text_method in ("minhash", "ngram")
-            else None
-        ),
-        "max_hamming": int(max_hamming),
-        "n_chunks": int(n_chunks),
-        "bands": int(bands),
-        "has_quality_gate": keep_frac is not None,
-        "group_cap_col": group_cap[0] if group_cap is not None else None,
-        "group_cap_k": int(group_cap[1]) if group_cap is not None else None,
-        "accounting_col": accounting_col,
-        "has_embeddings": embeddings is not None,
-        "semantic_threshold": float(semantic_threshold),
-    }
-    if bootstrap:
-        _write_policy(spark, state_dir, current_pol)
-    else:
-        stored = _read_policy(spark, state_dir)
-        if stored is None:
-            # pre-policy legacy state: adopt this call's parameters as
-            # the corpus policy (enforced from the next call on)
+        if bootstrap:
             _write_policy(spark, state_dir, current_pol)
         else:
-            drift = _policy_drift(stored, current_pol)
-            if drift and not allow_policy_change:
-                raise ValueError(
-                    f"ingest policy drift on {state_dir} — "
-                    + "; ".join(drift)
-                    + " — match the stored policy, or pass "
-                    "allow_policy_change=True for a deliberate change "
-                    "(earlier batches stay governed by the old policy)"
-                )
-            if drift:
+            stored = _read_policy(spark, state_dir)
+            if stored is None:
+                # pre-policy legacy state: adopt this call's parameters as
+                # the corpus policy (enforced from the next call on)
                 _write_policy(spark, state_dir, current_pol)
-    if not bootstrap and text_method == "ngram":
-        # fail FAST on a parameter drift the end-of-batch append would
-        # refuse anyway — by then the fingerprint/gate appends would
-        # already have committed, stranding the state mid-batch
-        meta = spark.read.parquet(f"{plane_path}/meta").first()
-        if n != meta.n or abs(threshold - meta.threshold) > 1e-12:
-            raise ValueError(
-                f"ngram ingest with n={n}, threshold={threshold} onto a "
-                f"plane written with n={meta.n}, "
-                f"threshold={meta.threshold} — match the stored "
-                "parameters or rebuild the state"
-            )
-    if scores is not None:
-        # one row per id (same collapse as prepare_corpus): duplicate
-        # score rows would fan out the group-cap rank join — a doc
-        # occupying several rank slots starves its group — and
-        # double-count in the persisted score sketch
-        scores = scores.groupBy(id_col).agg(
-            F.max(score_col).alias(score_col)
-        )
-    fresh = batch
-    if benchmark is not None:
-        fresh = decontaminate(fresh, benchmark, text_col, id_col)
-    if not bootstrap:
-        # plane 1: exact copies of anything already ingested
-        fresh = fingerprint_filter_new(
-            spark, state_dir, fresh, text_col, id_col
-        )
-    # stage the batch's signature frames ONCE (minhash: the plane's
-    # own two-table layout; simhash: the one signatures table): the
-    # cross-corpus probe, the within-batch pairing, and the
-    # end-of-batch plane append all reuse these parquet-backed
-    # frames — one tokenize→shingle→hash pass per batch instead of
-    # three (per-row projections and per-doc aggregations are
-    # deterministic, so frames computed here and semi-joined down to
-    # each stage's surviving ids equal frames recomputed on the
-    # subset).  Deleted with the other staging once the batch
-    # commits; a crashed run's copy is swept by fsck_state (never
-    # while an ingest is live — the in-progress-marker guard).  The
-    # ngram plane keeps the from-text route: its index appends under
-    # a frozen df-order contract, and its per-batch recompute is one
-    # tokenize+slice pass (no hash fan-out) — not worth entangling
-    # that invariant for.
-    sigs_path = sh_new = mh_new = sim_new = None
-    if text_method == "minhash":
-        sigs_path = f"{state_dir}/tmp/{batch_name}_sigs"
-        shingle_frame(fresh, text_col, id_col, n).write.mode(
-            "overwrite"
-        ).parquet(f"{sigs_path}/shingles")
-        sh_new = spark.read.parquet(f"{sigs_path}/shingles")
-        _minhash_signatures(sh_new, num_perm).write.mode(
-            "overwrite"
-        ).parquet(f"{sigs_path}/signatures")
-        mh_new = spark.read.parquet(f"{sigs_path}/signatures")
-    elif text_method == "simhash":
-        sigs_path = f"{state_dir}/tmp/{batch_name}_sigs"
-        simhash(fresh, text_col, id_col, n).select(
-            F.col(id_col).alias("_id"), "simhash"
-        ).write.mode("overwrite").parquet(f"{sigs_path}/signatures")
-        sim_new = spark.read.parquet(f"{sigs_path}/signatures")
-    if not bootstrap:
-        # plane 2: near-dups of the indexed corpus, probed on the
-        # state's text plane (each probe's exactness claim — equal to
-        # the cross-corpus slice of a full self-pairing — is its own
-        # docstring's and test's)
-        if text_method == "minhash":
-            cross = minhash_lsh_pairs_between_frames(
-                spark,
-                plane_path,
-                mh_new,
-                sh_new,
-                bands=bands,
-                threshold=threshold,
-                max_bucket=max_bucket,
-            )
-        elif text_method == "simhash":
-            cross = simhash_pairs_between_frames(
-                spark,
-                plane_path,
-                sim_new,
-                max_hamming=max_hamming,
-                n_chunks=n_chunks,
-            )
-        else:
-            cross = ngram_jaccard_pairs_between(
-                spark, plane_path, fresh, text_col, id_col,
-                threshold=threshold,
-            )
-        fresh = _drop_ids(fresh, id_col, cross.select("id_new").distinct())
-
-    sketch_path = f"{state_dir}/score_sketches"
-    counts_path = f"{state_dir}/group_counts"
-    if keep_frac is not None or group_cap is not None:
-        state_sk = None
-        if keep_frac is not None:
-            if scores is None:
-                raise ValueError("keep_frac needs a scores frame")
-            # gate against the corpus-so-far's retained distribution;
-            # the bootstrap batch (no state yet) gates against its
-            # own — the scores of its ELIGIBLE rows (semi-joined to
-            # the decontaminated batch, not the whole caller-supplied
-            # frame, which may span the corpus or score-correlated
-            # dropped docs)
-            state_sk = (
-                spark.read.parquet(sketch_path)
-                if _table_exists(spark, sketch_path)
-                else score_sketch(
-                    scores.select(id_col, score_col).join(
-                        fresh.select(id_col), id_col, "left_semi"
-                    ),
-                    score_col=score_col,
+            else:
+                drift = _policy_drift(stored, current_pol)
+                if drift and not allow_policy_change:
+                    raise ValueError(
+                        f"ingest policy drift on {state_dir} — "
+                        + "; ".join(drift)
+                        + " — match the stored policy, or pass "
+                        "allow_policy_change=True for a deliberate change "
+                        "(earlier batches stay governed by the old policy)"
+                    )
+                if drift:
+                    _write_policy(spark, state_dir, current_pol)
+        if not bootstrap and text_method == "ngram":
+            # fail FAST on a parameter drift the end-of-batch append would
+            # refuse anyway — by then the fingerprint/gate appends would
+            # already have committed, stranding the state mid-batch
+            meta = spark.read.parquet(f"{plane_path}/meta").first()
+            if n != meta.n or abs(threshold - meta.threshold) > 1e-12:
+                raise ValueError(
+                    f"ngram ingest with n={n}, threshold={threshold} onto a "
+                    f"plane written with n={meta.n}, "
+                    f"threshold={meta.threshold} — match the stored "
+                    "parameters or rebuild the state"
                 )
+        if scores is not None:
+            # one row per id (same collapse as prepare_corpus): duplicate
+            # score rows would fan out the group-cap rank join — a doc
+            # occupying several rank slots starves its group — and
+            # double-count in the persisted score sketch
+            scores = scores.groupBy(id_col).agg(
+                F.max(score_col).alias(score_col)
             )
-        # the shared eligibility stage (KLL-state cutoff,
-        # remaining-slots cap against the persisted admitted counts)
-        fresh = eligibility_filter(
-            fresh,
-            id_col,
-            scores,
-            score_col,
-            keep_frac=keep_frac,
-            unscored=unscored,
-            gate_sketches=state_sk,
-            group_cap=group_cap,
-            used_counts=(
-                spark.read.parquet(counts_path)
-                if group_cap is not None and _table_exists(spark, counts_path)
-                else None
-            ),
-        )
-
-    # materialize the probe-filtered rows ONCE before the within-batch
-    # dedup: dedup_clusters eagerly materializes its edge list (the
-    # within-batch LSH pair DAG) and the snapshot write below executes
-    # the survivors plan — both have the whole probe chain (3 plane
-    # anti-joins + the gate) as their upstream, so without this
-    # staging that chain runs two-plus times per batch.  One
-    # batch-sized parquet write buys single-execution of every probe
-    # (measured: ~30% of the fixed per-micro-batch job floor,
-    # tools/ingest_profile.py); deleted with the other staging below,
-    # swept by fsck_state after a crash.
-    eligible_path = f"{state_dir}/tmp/{batch_name}_eligible"
-    fresh.write.mode("overwrite").parquet(eligible_path)
-    fresh = spark.read.parquet(eligible_path)
-
-    # within-batch dedup: exact FIRST (minhash pairs do NOT subsume
-    # exact copies of texts shorter than the shingle order — zero-
-    # shingle rows never enter the LSH — and a capped hot bucket can
-    # drop identical-text pairs), then near-dup on the exact
-    # survivors.  The published corpus and the fingerprint table stay
-    # one-row-per-text consistent.
-    surv = dedup_corpus(fresh, text_col, id_col, method="fingerprint")
-    if text_method in ("minhash", "simhash"):
-        # within-batch near-dup pairs from the staged signature
-        # frames, semi-joined down to the ids still alive after the
-        # exact pass — identical pairs to recomputing on the subset
-        # (per-row projections / per-doc aggregations; minhash bucket
-        # caps applied after the filter, same as the text path), at
-        # zero re-hash cost
-        alive = surv.select(F.col(id_col).alias("_id"))
+        fresh = batch
+        if benchmark is not None:
+            fresh = decontaminate(fresh, benchmark, text_col, id_col)
+        if not bootstrap:
+            # plane 1: exact copies of anything already ingested
+            fresh = fingerprint_filter_new(
+                spark, state_dir, fresh, text_col, id_col
+            )
+        # stage the batch's signature frames ONCE (minhash: the plane's
+        # own two-table layout; simhash: the one signatures table): the
+        # cross-corpus probe, the within-batch pairing, and the
+        # end-of-batch plane append all reuse these parquet-backed
+        # frames — one tokenize→shingle→hash pass per batch instead of
+        # three (per-row projections and per-doc aggregations are
+        # deterministic, so frames computed here and semi-joined down to
+        # each stage's surviving ids equal frames recomputed on the
+        # subset).  Deleted with the other staging once the batch
+        # commits; a crashed run's copy is swept by fsck_state (never
+        # while an ingest is live — the in-progress-marker guard).  The
+        # ngram plane keeps the from-text route: its index appends under
+        # a frozen df-order contract, and its per-batch recompute is one
+        # tokenize+slice pass (no hash fan-out) — not worth entangling
+        # that invariant for.
+        sigs_path = sh_new = mh_new = sim_new = None
         if text_method == "minhash":
-            pairs_wb = minhash_lsh_pairs_frames(
-                mh_new.join(alive, "_id", "left_semi"),
-                sh_new.join(alive, "_id", "left_semi"),
-                bands=bands,
-                threshold=threshold,
-                max_bucket=max_bucket,
+            sigs_path = f"{state_dir}/tmp/{batch_name}_sigs"
+            shingle_frame(fresh, text_col, id_col, n).write.mode(
+                "overwrite"
+            ).parquet(f"{sigs_path}/shingles")
+            sh_new = spark.read.parquet(f"{sigs_path}/shingles")
+            _minhash_signatures(sh_new, num_perm).write.mode(
+                "overwrite"
+            ).parquet(f"{sigs_path}/signatures")
+            mh_new = spark.read.parquet(f"{sigs_path}/signatures")
+        elif text_method == "simhash":
+            sigs_path = f"{state_dir}/tmp/{batch_name}_sigs"
+            simhash(fresh, text_col, id_col, n).select(
+                F.col(id_col).alias("_id"), "simhash"
+            ).write.mode("overwrite").parquet(f"{sigs_path}/signatures")
+            sim_new = spark.read.parquet(f"{sigs_path}/signatures")
+        if not bootstrap:
+            # plane 2: near-dups of the indexed corpus, probed on the
+            # state's text plane (each probe's exactness claim — equal to
+            # the cross-corpus slice of a full self-pairing — is its own
+            # docstring's and test's)
+            if text_method == "minhash":
+                cross = minhash_lsh_pairs_between_frames(
+                    spark,
+                    plane_path,
+                    mh_new,
+                    sh_new,
+                    bands=bands,
+                    threshold=threshold,
+                    max_bucket=max_bucket,
+                )
+            elif text_method == "simhash":
+                cross = simhash_pairs_between_frames(
+                    spark,
+                    plane_path,
+                    sim_new,
+                    max_hamming=max_hamming,
+                    n_chunks=n_chunks,
+                )
+            else:
+                cross = ngram_jaccard_pairs_between(
+                    spark, plane_path, fresh, text_col, id_col,
+                    threshold=threshold,
+                )
+            fresh = _drop_ids(fresh, id_col, cross.select("id_new").distinct())
+
+        sketch_path = f"{state_dir}/score_sketches"
+        counts_path = f"{state_dir}/group_counts"
+        if keep_frac is not None or group_cap is not None:
+            state_sk = None
+            if keep_frac is not None:
+                if scores is None:
+                    raise ValueError("keep_frac needs a scores frame")
+                # gate against the corpus-so-far's retained distribution;
+                # the bootstrap batch (no state yet) gates against its
+                # own — the scores of its ELIGIBLE rows (semi-joined to
+                # the decontaminated batch, not the whole caller-supplied
+                # frame, which may span the corpus or score-correlated
+                # dropped docs)
+                state_sk = (
+                    spark.read.parquet(sketch_path)
+                    if _table_exists(spark, sketch_path)
+                    else score_sketch(
+                        scores.select(id_col, score_col).join(
+                            fresh.select(id_col), id_col, "left_semi"
+                        ),
+                        score_col=score_col,
+                    )
+                )
+            # the shared eligibility stage (KLL-state cutoff,
+            # remaining-slots cap against the persisted admitted counts)
+            fresh = eligibility_filter(
+                fresh,
+                id_col,
+                scores,
+                score_col,
+                keep_frac=keep_frac,
+                unscored=unscored,
+                gate_sketches=state_sk,
+                group_cap=group_cap,
+                used_counts=(
+                    spark.read.parquet(counts_path)
+                    if group_cap is not None
+                    and _table_exists(spark, counts_path)
+                    else None
+                ),
+            )
+
+        # materialize the probe-filtered rows ONCE before the within-batch
+        # dedup: dedup_clusters eagerly materializes its edge list (the
+        # within-batch LSH pair DAG) and the snapshot write below executes
+        # the survivors plan — both have the whole probe chain (3 plane
+        # anti-joins + the gate) as their upstream, so without this
+        # staging that chain runs two-plus times per batch.  One
+        # batch-sized parquet write buys single-execution of every probe
+        # (measured: ~30% of the fixed per-micro-batch job floor,
+        # tools/ingest_profile.py); deleted with the other staging below,
+        # swept by fsck_state after a crash.
+        eligible_path = f"{state_dir}/tmp/{batch_name}_eligible"
+        fresh.write.mode("overwrite").parquet(eligible_path)
+        fresh = spark.read.parquet(eligible_path)
+
+        # within-batch dedup: exact FIRST (minhash pairs do NOT subsume
+        # exact copies of texts shorter than the shingle order — zero-
+        # shingle rows never enter the LSH — and a capped hot bucket can
+        # drop identical-text pairs), then near-dup on the exact
+        # survivors.  The published corpus and the fingerprint table stay
+        # one-row-per-text consistent.
+        surv = dedup_corpus(fresh, text_col, id_col, method="fingerprint")
+        if text_method in ("minhash", "simhash"):
+            # within-batch near-dup pairs from the staged signature
+            # frames, semi-joined down to the ids still alive after the
+            # exact pass — identical pairs to recomputing on the subset
+            # (per-row projections / per-doc aggregations; minhash bucket
+            # caps applied after the filter, same as the text path), at
+            # zero re-hash cost
+            alive = surv.select(F.col(id_col).alias("_id"))
+            if text_method == "minhash":
+                pairs_wb = minhash_lsh_pairs_frames(
+                    mh_new.join(alive, "_id", "left_semi"),
+                    sh_new.join(alive, "_id", "left_semi"),
+                    bands=bands,
+                    threshold=threshold,
+                    max_bucket=max_bucket,
+                )
+            else:
+                # the frame is batch-sized by construction (staged sigs
+                # semi-joined to the exact-pass survivors, all ⊆ the
+                # eligible staging just written above) — pass that bound
+                # as n_docs so the occupancy guard costs a driver-side
+                # footer read instead of a join-backed count() job per
+                # batch (the guard is monotone in n_docs, so an upper
+                # bound can only refuse earlier, never admit more)
+                from hadoop__spark.operators.util import parquet_row_count
+
+                pairs_wb = simhash_pairs_frames(
+                    sim_new.join(alive, "_id", "left_semi"),
+                    max_hamming=max_hamming,
+                    n_chunks=n_chunks,
+                    n_docs=parquet_row_count(spark, eligible_path),
+                )
+            surv = dedup_corpus(
+                surv,
+                text_col,
+                id_col,
+                pairs=pairs_wb,
+                scores=scores,
+                score_col=score_col,
+                checkpoint_dir=checkpoint_dir,
             )
         else:
-            # the frame is batch-sized by construction (staged sigs
-            # semi-joined to the exact-pass survivors, all ⊆ the
-            # eligible staging just written above) — pass that bound
-            # as n_docs so the occupancy guard costs a driver-side
-            # footer read instead of a join-backed count() job per
-            # batch (the guard is monotone in n_docs, so an upper
-            # bound can only refuse earlier, never admit more)
-            from hadoop__spark.operators.util import parquet_row_count
-
-            pairs_wb = simhash_pairs_frames(
-                sim_new.join(alive, "_id", "left_semi"),
-                max_hamming=max_hamming,
-                n_chunks=n_chunks,
-                n_docs=parquet_row_count(spark, eligible_path),
-            )
-        surv = dedup_corpus(
-            surv,
-            text_col,
-            id_col,
-            pairs=pairs_wb,
-            scores=scores,
-            score_col=score_col,
-            checkpoint_dir=checkpoint_dir,
-        )
-    else:
-        surv = dedup_corpus(
-            surv,
-            text_col,
-            id_col,
-            method=text_method,
-            scores=scores,
-            score_col=score_col,
-            checkpoint_dir=checkpoint_dir,
-            threshold=threshold,
-            n=n,
-        )
-
-    ivf_path = f"{state_dir}/ivf"
-    text_surv_path = None
-    if embeddings is not None:
-        # materialize the text-plane survivors BEFORE the semantic
-        # stage: semantic_dedup runs several independent actions
-        # (sizing count, centroid-fit sample, assignment, pairing),
-        # each of which would otherwise re-derive the whole lazy
-        # filter chain — including the minhash self-join
-        text_surv_path = f"{state_dir}/tmp/{batch_name}_text_survivors"
-        surv.write.mode("overwrite").parquet(text_surv_path)
-        surv = spark.read.parquet(text_surv_path)
-        emb = embeddings.select(
-            F.col(id_col).alias("_eid"), F.col(embedding_col)
-        ).join(
-            surv.select(F.col(id_col).alias("_eid")), "_eid", "left_semi"
-        ).select(F.col("_eid").alias(id_col), embedding_col)
-        if _table_exists(spark, f"{ivf_path}/centroids"):
-            # plane 3: semantic near-dups of the indexed corpus
-            # (frozen-centroid assignment, partition-pruned probe)
-            cross_e = embedding_pairs_against_index(
-                spark,
-                ivf_path,
-                emb,
-                embedding_col,
+            surv = dedup_corpus(
+                surv,
+                text_col,
                 id_col,
+                method=text_method,
+                scores=scores,
+                score_col=score_col,
+                checkpoint_dir=checkpoint_dir,
+                threshold=threshold,
+                n=n,
+            )
+
+        ivf_path = f"{state_dir}/ivf"
+        text_surv_path = None
+        if embeddings is not None:
+            # materialize the text-plane survivors BEFORE the semantic
+            # stage: semantic_dedup runs several independent actions
+            # (sizing count, centroid-fit sample, assignment, pairing),
+            # each of which would otherwise re-derive the whole lazy
+            # filter chain — including the minhash self-join
+            text_surv_path = f"{state_dir}/tmp/{batch_name}_text_survivors"
+            surv.write.mode("overwrite").parquet(text_surv_path)
+            surv = spark.read.parquet(text_surv_path)
+            emb = embeddings.select(
+                F.col(id_col).alias("_eid"), F.col(embedding_col)
+            ).join(
+                surv.select(F.col(id_col).alias("_eid")), "_eid", "left_semi"
+            ).select(F.col("_eid").alias(id_col), embedding_col)
+            if _table_exists(spark, f"{ivf_path}/centroids"):
+                # plane 3: semantic near-dups of the indexed corpus
+                # (frozen-centroid assignment, partition-pruned probe)
+                cross_e = embedding_pairs_against_index(
+                    spark,
+                    ivf_path,
+                    emb,
+                    embedding_col,
+                    id_col,
+                    threshold=semantic_threshold,
+                    n_assign=n_assign,
+                    assign=assign,
+                )
+                dup_e = cross_e.select("id_new").distinct()
+                surv = _drop_ids(surv, id_col, dup_e)
+                emb = _drop_ids(emb, id_col, dup_e)
+            # within-batch semantic dedup (fits its own centroids on the
+            # small batch; scores arbitrate keepers as in dedup_corpus)
+            kept_e = semantic_dedup(
+                emb,
+                vec_col=embedding_col,
+                id_col=id_col,
                 threshold=semantic_threshold,
+                nlist=nlist,
                 n_assign=n_assign,
+                seed=seed,
+                scores=scores,
+                score_col=score_col,
+                checkpoint_dir=checkpoint_dir,
                 assign=assign,
             )
-            dup_e = cross_e.select("id_new").distinct()
-            surv = _drop_ids(surv, id_col, dup_e)
-            emb = _drop_ids(emb, id_col, dup_e)
-        # within-batch semantic dedup (fits its own centroids on the
-        # small batch; scores arbitrate keepers as in dedup_corpus)
-        kept_e = semantic_dedup(
-            emb,
-            vec_col=embedding_col,
+            sem_dropped = emb.select(id_col).join(
+                kept_e.select(F.col(id_col).alias("_k")),
+                F.col(id_col) == F.col("_k"),
+                "left_anti",
+            )
+            surv = _drop_ids(surv, id_col, sem_dropped.select(id_col))
+
+        # materialize the survivors ONCE; everything below (three state
+        # appends + the returned frame) scans this table instead of
+        # re-running the filter chain — and the fingerprint append no
+        # longer reads the table it writes
+        surv.write.mode("overwrite").parquet(batch_path)
+        if text_surv_path is not None:
+            # the text-survivors staging table fed the semantic stage and
+            # the batch_path write above; done with it — without this, the
+            # tmp dir accrues one full survivors copy per batch forever
+            _delete_path(spark, text_surv_path)
+        _delete_path(spark, eligible_path)
+        surv_m = spark.read.parquet(batch_path)
+
+        covered = _write_state_tables(
+            spark,
+            state_dir,
+            surv_m,
+            mode="bootstrap" if bootstrap else "append",
+            text_col=text_col,
             id_col=id_col,
-            threshold=semantic_threshold,
-            nlist=nlist,
-            n_assign=n_assign,
-            seed=seed,
+            text_method=text_method,
+            n=n,
+            num_perm=num_perm,
+            threshold=threshold,
             scores=scores,
             score_col=score_col,
-            checkpoint_dir=checkpoint_dir,
-            assign=assign,
+            write_gate=keep_frac is not None,
+            group_cap_col=group_cap[0] if group_cap is not None else None,
+            accounting_col=accounting_col,
+            embeddings=embeddings,
+            embedding_col=embedding_col,
+            nlist=nlist,
+            seed=seed,
+            sig_frames=(
+                None
+                if sigs_path is None
+                else (
+                    {"sh": sh_new, "mh": mh_new}
+                    if text_method == "minhash"
+                    else {"sim": sim_new}
+                )
+            ),
         )
-        sem_dropped = emb.select(id_col).join(
-            kept_e.select(F.col(id_col).alias("_k")),
-            F.col(id_col) == F.col("_k"),
-            "left_anti",
-        )
-        surv = _drop_ids(surv, id_col, sem_dropped.select(id_col))
-
-    # materialize the survivors ONCE; everything below (three state
-    # appends + the returned frame) scans this table instead of
-    # re-running the filter chain — and the fingerprint append no
-    # longer reads the table it writes
-    surv.write.mode("overwrite").parquet(batch_path)
-    if text_surv_path is not None:
-        # the text-survivors staging table fed the semantic stage and
-        # the batch_path write above; done with it — without this, the
-        # tmp dir accrues one full survivors copy per batch forever
-        _delete_path(spark, text_surv_path)
-    _delete_path(spark, eligible_path)
-    surv_m = spark.read.parquet(batch_path)
-
-    covered = _write_state_tables(
-        spark,
-        state_dir,
-        surv_m,
-        mode="bootstrap" if bootstrap else "append",
-        text_col=text_col,
-        id_col=id_col,
-        text_method=text_method,
-        n=n,
-        num_perm=num_perm,
-        threshold=threshold,
-        scores=scores,
-        score_col=score_col,
-        write_gate=keep_frac is not None,
-        group_cap_col=group_cap[0] if group_cap is not None else None,
-        accounting_col=accounting_col,
-        embeddings=embeddings,
-        embedding_col=embedding_col,
-        nlist=nlist,
-        seed=seed,
-        sig_frames=(
-            None
-            if sigs_path is None
-            else (
-                {"sh": sh_new, "mh": mh_new}
-                if text_method == "minhash"
-                else {"sim": sim_new}
-            )
-        ),
-    )
-    # LAST step: the batch's commit marker — every state append above
-    # completed, so an on_existing="skip" replay may safely no-op; the
-    # marker content records WHICH planes it covers
-    _write_commit_marker(spark, batch_path, covered)
-    if sigs_path is not None:
-        # the staged signature frames fed the probe, the within-batch
-        # pairing, and the plane append — all durable now
-        _delete_path(spark, sigs_path)
-    return surv_m
+        # LAST step: the batch's commit marker — every state append above
+        # completed, so an on_existing="skip" replay may safely no-op; the
+        # marker content records WHICH planes it covers
+        _write_commit_marker(spark, batch_path, covered)
+        if sigs_path is not None:
+            # the staged signature frames fed the probe, the within-batch
+            # pairing, and the plane append — all durable now
+            _delete_path(spark, sigs_path)
+        return surv_m
 
 
 def _resolve_rebuild_params(
@@ -1348,14 +1388,14 @@ def _resolve_rebuild_params(
     real state stale — the class of mistake retract_documents used to
     surface only AFTER its destructive rewrite); omitted values
     default from the policy, then the detected plane layout, then the
-    ingest defaults (legacy pre-policy states)."""
+    :func:`ingest_batch` defaults (legacy pre-policy states)."""
     resolved = []
     defaults = {
-        "text_method": detected_plane or "minhash",
-        "n": 3,
-        "num_perm": 64,
-        "threshold": 0.8,
+        name: p.default
+        for name, p in inspect.signature(ingest_batch).parameters.items()
     }
+    if detected_plane is not None:
+        defaults["text_method"] = detected_plane
     for name, explicit in (
         ("text_method", text_method),
         ("n", n),
@@ -1542,11 +1582,7 @@ def rebuild_state(
             f"no complete batch snapshots under {state_dir}/batches — "
             "nothing to rebuild from"
         )
-    union = spark.read.parquet(complete[0])
-    for b in complete[1:]:
-        union = union.unionByName(
-            spark.read.parquet(b), allowMissingColumns=True
-        )
+    union = _union_snapshots(spark, complete)
     covered = _write_state_tables(
         spark,
         state_dir,
@@ -1574,22 +1610,13 @@ def rebuild_state(
         _write_policy(
             spark,
             state_dir,
-            {
-                "text_method": text_method,
-                "n": int(n),
-                "num_perm": (
-                    int(num_perm) if text_method == "minhash" else None
-                ),
-                "threshold": (
-                    float(threshold)
-                    if text_method in ("minhash", "ngram")
-                    else None
-                ),
-                "has_quality_gate": scores is not None,
-                "group_cap_col": group_cap_col,
-                "accounting_col": accounting_col,
-                "has_embeddings": embeddings is not None,
-            },
+            _policy_row(
+                text_method, n, num_perm, threshold,
+                has_quality_gate=scores is not None,
+                group_cap_col=group_cap_col,
+                accounting_col=accounting_col,
+                has_embeddings=embeddings is not None,
+            ),
         )
     rebuilt = set()
     if scores is not None:
@@ -1641,13 +1668,17 @@ def rebuild_sketch_states(
     are left as-is (coverage refusals stay conservative).  Stale
     markers clear for whatever was rebuilt.
 
-    Runs under the maintenance lock: unlike :func:`rebuild_state`
-    (the crash-recovery path, which must run even when markers are
-    stale), this is a maintenance operation on a HEALTHY state and
-    must not race a concurrent ingest's appends.  (The takedown verbs
-    compose the same repair in-line via ``repair_sketches=True``,
-    under their own lock hold — one call, one lock, healthy end
-    state.)
+    Runs under the maintenance lock, fsck-first: unlike
+    :func:`rebuild_state` (the crash-recovery path, which must run
+    even when markers are stale), this is a maintenance operation on
+    a HEALTHY state and must not race a concurrent ingest's appends —
+    and a crashed snapshot surgery is finished before the snapshots
+    are counted (a mid-surgery snapshot holds its staged replacement
+    rows AND the hit files they supersede), while a crashed fast
+    retraction refuses (see :func:`_maintenance_lock`).  (The
+    takedown verbs compose the same repair in-line via
+    ``repair_sketches=True``, under their own lock hold — one call,
+    one lock, healthy end state.)
 
     Returns ``{"rebuilt": [...], "still_stale": [...]}`` (coverage
     plane names / stale-marker entries).
@@ -1662,7 +1693,7 @@ def rebuild_sketch_states(
     include = _sketch_repair_planes(pol, scores)
     if not include:
         return {"rebuilt": [], "still_stale": sorted(_read_stale(spark, state_dir))}
-    with _maintenance_lock(spark, state_dir):
+    with _maintenance_lock(spark, state_dir, "rebuild_sketch_states"):
         return _rebuild_sketch_states_locked(
             spark, state_dir, pol, include, scores, score_col, text_col,
             id_col,
@@ -1690,6 +1721,10 @@ def _rebuild_sketch_states_locked(
     the maintenance lock — shared with the takedown verbs'
     ``repair_sketches=True`` composition (which already holds the lock
     for its snapshot rewrites and must not re-acquire)."""
+    # no explicit values: the stored policy's, else ingest_batch's
+    text_method, n, num_perm, threshold = _resolve_rebuild_params(
+        pol, None, None, None, None, None
+    )
     union = _read_snapshots_union(spark, state_dir)
     covered = _write_state_tables(
         spark,
@@ -1698,10 +1733,10 @@ def _rebuild_sketch_states_locked(
         mode="rebuild",
         text_col=text_col,
         id_col=id_col,
-        text_method=pol["text_method"],
-        n=pol.get("n") or 3,
-        num_perm=pol.get("num_perm") or 64,
-        threshold=pol.get("threshold") or 0.8,
+        text_method=text_method,
+        n=n,
+        num_perm=num_perm,
+        threshold=threshold,
         scores=scores,
         score_col=score_col,
         write_gate="gate" in include,
@@ -1764,12 +1799,7 @@ def _rewrite_snapshots_without(
     so no rebuild ever unions a mid-surgery snapshot (whose transient
     shape is duplicates, never losses — the same at-worst-duplicates
     reader contract as the flat tables)."""
-    complete = [
-        b
-        for b in _list_child_dirs(spark, f"{state_dir}/batches")
-        if _table_exists(spark, f"{b}/_SUCCESS")
-        # partial snapshots are excluded; rebuild_state sweeps them
-    ]
+    complete = _complete_snapshots(spark, state_dir)
     if not complete:
         return []
     scan = spark.read.option("mergeSchema", "true").parquet(*complete)
@@ -1910,7 +1940,7 @@ def retract_documents(
     lock (a crashed coalesce's partially-deleted sources would
     otherwise scope the retraction to a PARTIAL corpus, and the later
     fsck would adopt the pre-retraction staged epoch — resurrecting
-    the ids; see :func:`_fsck_first`).
+    the ids; see :func:`_maintenance_lock`).
 
     Retraction semantics are the inverse of first-arrival: once a
     document is retracted, it is GONE from every plane — a later
@@ -1940,8 +1970,6 @@ def retract_documents(
     # validate BEFORE any destructive rewrite: a bad kwarg must refuse
     # while the snapshots and state are still intact
     if mode == "rebuild":
-        import inspect
-
         valid = set(
             inspect.signature(rebuild_state).parameters
         ) - {"spark", "state_dir", "id_col"}
@@ -1999,13 +2027,7 @@ def retract_documents(
             "cannot subtract; pass scores=<corpus (id, score) frame> "
             "(or drop repair_sketches and rebuild_sketch_states later)"
         )
-    with _maintenance_lock(spark, state_dir):
-        # fsck-first (the shared maintenance-verb contract): a crashed
-        # coalesce mid-swap would otherwise leave this retraction
-        # reading a PARTIAL snapshot set, and the later fsck would
-        # adopt the pre-retraction staged epoch — resurrecting the
-        # retracted ids with nothing left to flag it (see _fsck_first)
-        _fsck_first(spark, state_dir, "retract_documents")
+    with _maintenance_lock(spark, state_dir, "retract_documents"):
         # FREEZE the retract set before any mutation: the caller's
         # frame may lazily derive from the very snapshots the rewrite
         # below deletes-and-swaps (the natural "retract everything
@@ -2086,11 +2108,7 @@ def _retract_fast(
     # the one policy state that CAN subtract); only ids actually
     # present decrement, so retracting an unknown id is a no-op
     cap_col = pol.get("group_cap_col")
-    batch_dirs = [
-        b
-        for b in _list_child_dirs(spark, f"{state_dir}/batches")
-        if _table_exists(spark, f"{b}/_SUCCESS")
-    ]
+    batch_dirs = _complete_snapshots(spark, state_dir)
     if not batch_dirs:
         raise ValueError(
             f"no complete batch snapshots under {state_dir}/batches — "
@@ -2099,11 +2117,7 @@ def _retract_fast(
     if cap_col is not None and _table_exists(
         spark, f"{state_dir}/group_counts"
     ):
-        union = spark.read.parquet(batch_dirs[0])
-        for b in batch_dirs[1:]:
-            union = union.unionByName(
-                spark.read.parquet(b), allowMissingColumns=True
-            )
+        union = _union_snapshots(spark, batch_dirs)
         if vals is not None:
             # pushed IN over the snapshots' id column: row-group stats
             # skip clean files, so the removed-rows scan is ∝ files
@@ -2170,22 +2184,35 @@ def _retract_fast(
     return _read_snapshots_union(spark, state_dir)
 
 
-def _read_snapshots_union(spark, state_dir: str) -> DataFrame:
-    dirs = [
+def _complete_snapshots(spark, state_dir: str) -> list[str]:
+    """The batch snapshots whose own write completed (``_SUCCESS``);
+    a partial one crashed before any state append and never fed the
+    state (:func:`rebuild_state` sweeps it)."""
+    return [
         b
         for b in _list_child_dirs(spark, f"{state_dir}/batches")
         if _table_exists(spark, f"{b}/_SUCCESS")
     ]
+
+
+def _union_snapshots(spark, paths: list[str]) -> DataFrame:
+    """The snapshots' rows as one frame; optional columns that drifted
+    across batches are null-filled."""
+    union = spark.read.parquet(paths[0])
+    for p in paths[1:]:
+        union = union.unionByName(
+            spark.read.parquet(p), allowMissingColumns=True
+        )
+    return union
+
+
+def _read_snapshots_union(spark, state_dir: str) -> DataFrame:
+    dirs = _complete_snapshots(spark, state_dir)
     if not dirs:
         raise ValueError(
             f"no complete batch snapshots under {state_dir}/batches"
         )
-    union = spark.read.parquet(dirs[0])
-    for b in dirs[1:]:
-        union = union.unionByName(
-            spark.read.parquet(b), allowMissingColumns=True
-        )
-    return union
+    return _union_snapshots(spark, dirs)
 
 
 def _delete_keys_file_local(
@@ -2383,8 +2410,8 @@ def decontaminate_state(
     # PARTIAL corpus (contaminated docs in the missing sources never
     # flagged).  Repair-or-refuse before reading; the retraction at
     # the end re-guards under its own lock hold.
-    with _maintenance_lock(spark, state_dir):
-        _fsck_first(spark, state_dir, "decontaminate_state")
+    with _maintenance_lock(spark, state_dir, "decontaminate_state"):
+        pass
     union = _read_snapshots_union(spark, state_dir)
     flagged = contamination_report(
         union, benchmark, text_col, id_col, n=n
@@ -2430,11 +2457,11 @@ def compact_state(
     the existence check (which would otherwise skip the table), and a
     mid-surgery table (whose duplicate rows a compaction would bake
     in while dropping the needs-rebuild flag) refuses
-    (:func:`_fsck_first`).
+    (:func:`_maintenance_lock`).
 
     Returns ``{table: files_written}`` for the tables that existed.
     """
-    with _maintenance_lock(spark, state_dir):
+    with _maintenance_lock(spark, state_dir, "compact_state"):
         return _compact_state_locked(spark, state_dir, target_file_bytes)
 
 
@@ -2442,29 +2469,19 @@ def _compact_state_locked(
     spark,
     state_dir: str,
     target_file_bytes: int,
-    fsck: bool = True,
     skip_ivf: bool = False,
 ) -> dict[str, int]:
     """:func:`compact_state`'s body, run under the maintenance lock
     (shared with :func:`maintain_state`'s single lock hold —
-    ``fsck=False`` skips the fsck-first pass when the composing verb
-    already ran it under the same hold; ``skip_ivf=True`` skips the
-    IVF rewrite when a just-finished refit already rewrote the index
-    in :func:`_compact_ivf_assigned`'s exact layout — one file per
-    bucket, id-sorted within buckets (``ivf_write_index`` sorts within
-    partitions), so re-compacting it in the same window would double
-    the window's table I/O to produce byte-equivalent row groups)."""
+    ``skip_ivf=True`` skips the IVF rewrite when a just-finished refit
+    already rewrote the index in :func:`_compact_ivf_assigned`'s exact
+    layout — one file per bucket, id-sorted within buckets
+    (``ivf_write_index`` sorts within partitions), so re-compacting it
+    in the same window would double the window's table I/O to produce
+    byte-equivalent row groups)."""
     from hadoop__spark.sources.io import compact_parquet
 
     done: dict[str, int] = {}
-    # fsck-first (the shared maintenance-verb contract): restores a
-    # previously-crashed compact's {table}__compact_tmp BEFORE the
-    # existence check below (which would otherwise SKIP the table —
-    # its data sits at the tmp path), and refuses mid-surgery tables
-    # whose duplicate rows a compaction would silently bake in while
-    # dropping the _RETRACT_SURGERY marker that flags them
-    if fsck:
-        _fsck_first(spark, state_dir, "compact_state")
     for rel, sort_by in _STATE_TABLES.items():
         path = f"{state_dir}/{rel}"
         if not _table_exists(spark, path):
@@ -2703,8 +2720,7 @@ def refit_ivf_index(
     lock hold) when called with ``refit="advice"`` and the bucket
     skew crosses the :func:`state_summary` threshold.
     """
-    with _maintenance_lock(spark, state_dir):
-        _fsck_first(spark, state_dir, "refit_ivf_index")
+    with _maintenance_lock(spark, state_dir, "refit_ivf_index"):
         return _refit_ivf_locked(spark, state_dir, nlist, seed)
 
 
@@ -2814,7 +2830,8 @@ def coalesce_snapshots(
 
     Runs under the maintenance lock, fsck-first (a crashed
     surgery/coalesce stage is repaired before the snapshot set is
-    read; a crashed fast retraction refuses — see :func:`_fsck_first`).
+    read; a crashed fast retraction refuses — see
+    :func:`_maintenance_lock`).
     Returns ``{"epoch": name or None, "coalesced": [names...],
     "skipped_uncommitted": [...]}``.  :func:`maintain_state` composes
     this with the fsck and the table compaction as one verb.
@@ -2826,7 +2843,7 @@ def coalesce_snapshots(
     """
     if keep_recent < 0:
         raise ValueError(f"keep_recent must be >= 0, got {keep_recent}")
-    with _maintenance_lock(spark, state_dir):
+    with _maintenance_lock(spark, state_dir, "coalesce_snapshots"):
         return _coalesce_snapshots_locked(
             spark, state_dir, names, keep_recent, target_file_bytes
         )
@@ -2838,29 +2855,15 @@ def _coalesce_snapshots_locked(
     names: list[str] | None,
     keep_recent: int,
     target_file_bytes: int,
-    fsck: bool = True,
 ) -> dict:
     """:func:`coalesce_snapshots`'s body, run under the maintenance
-    lock (shared with :func:`maintain_state`'s single lock hold —
-    ``fsck=False`` skips the fsck-first pass when the composing verb
-    already ran it under the same hold)."""
+    lock (shared with :func:`maintain_state`'s single lock hold)."""
     import hashlib
 
     from hadoop__spark.operators.util import path_bytes, path_mtime
 
-    # fsck-first: a crashed surgery/coalesce stage must be
-    # repaired (or the state refused) before the snapshot set
-    # below is read — see _fsck_first for the two failure
-    # compositions this closes
-    if fsck:
-        _fsck_first(spark, state_dir, "coalesce_snapshots")
-    complete = [
-        b
-        for b in _list_child_dirs(spark, f"{state_dir}/batches")
-        if _table_exists(spark, f"{b}/_SUCCESS")
-    ]
     committed, skipped = [], []
-    for b in complete:
+    for b in _complete_snapshots(spark, state_dir):
         name = b.rstrip("/").rsplit("/", 1)[-1]
         if _read_commit_marker(spark, b) is None:
             skipped.append(name)
@@ -2901,13 +2904,10 @@ def _coalesce_snapshots_locked(
             "batch; retract or rename it first"
         )
     src_paths = [f"{state_dir}/batches/{n}" for n in sources]
-    union = spark.read.parquet(src_paths[0])
-    covered = _read_commit_marker(spark, src_paths[0])
-    for p in src_paths[1:]:
-        union = union.unionByName(
-            spark.read.parquet(p), allowMissingColumns=True
-        )
-        covered &= _read_commit_marker(spark, p)
+    union = _union_snapshots(spark, src_paths)
+    covered = set.intersection(
+        *(_read_commit_marker(spark, p) for p in src_paths)
+    )
     # right-size from the sources' on-disk bytes — coalesce, not
     # repartition: the epoch write must not shuffle the corpus
     total = sum(path_bytes(spark, p) for p in src_paths)
@@ -2951,10 +2951,11 @@ def maintain_state(
     bound the snapshot count (:func:`coalesce_snapshots`), rebalance a
     drifted IVF index when asked (:func:`refit_ivf_index`), and
     right-size the probe tables (:func:`compact_state`) under a single
-    maintenance-lock acquisition (the fsck pass runs ONCE and the
-    composed steps skip theirs) — so an operator's cron job is one
-    call and a concurrent :func:`ingest_batch` sees one exclusion
-    window instead of several lock/unlock races it could slip between.
+    maintenance-lock acquisition (whose fsck pass runs ONCE — the
+    composed step bodies run none of their own) — so an operator's
+    cron job is one call and a concurrent :func:`ingest_batch` sees
+    one exclusion window instead of several lock/unlock races it
+    could slip between.
 
     ``refit="advice"`` consults the same zero-job bucket-balance
     measurement :func:`state_summary` exposes as
@@ -2981,11 +2982,9 @@ def maintain_state(
         raise ValueError(f"keep_recent must be >= 0, got {keep_recent}")
     if refit not in ("advice", "off"):
         raise ValueError(f"refit must be 'advice' or 'off', got {refit!r}")
-    with _maintenance_lock(spark, state_dir):
-        fsck = _fsck_first(spark, state_dir, "maintain_state")
+    with _maintenance_lock(spark, state_dir, "maintain_state") as fsck:
         coalesce = _coalesce_snapshots_locked(
-            spark, state_dir, None, keep_recent, target_file_bytes,
-            fsck=False,
+            spark, state_dir, None, keep_recent, target_file_bytes
         )
         refit_report = None
         if refit == "advice":
@@ -3002,7 +3001,7 @@ def maintain_state(
                 )
         compact = _compact_state_locked(
             spark, state_dir, target_file_bytes,
-            fsck=False, skip_ivf=refit_report is not None,
+            skip_ivf=refit_report is not None,
         )
     return {
         "fsck": fsck,
@@ -3052,7 +3051,7 @@ def fsck_state(spark, state_dir: str, blocking: bool = True) -> dict:
     :func:`rebuild_state`).
 
     Every maintenance verb runs this first under its lock and refuses
-    while anything needs a rebuild (:func:`_fsck_first`) — crashed
+    while anything needs a rebuild (:func:`_maintenance_lock`) — crashed
     stages must never compose into a later verb's snapshot walk.
 
     Standalone runs take the maintenance lock themselves: a fsck
@@ -3097,7 +3096,7 @@ def fsck_state(spark, state_dir: str, blocking: bool = True) -> dict:
 def _fsck_state_locked(spark, state_dir: str) -> dict:
     """:func:`fsck_state`'s body, run while the caller holds the
     maintenance lock (the standalone wrapper above, or a maintenance
-    verb's :func:`_fsck_first`)."""
+    verb's :func:`_maintenance_lock`)."""
     restored, swept, needs_rebuild = [], [], []
     # "ivf/assigned" shares the flat tables' write-tmp/delete/rename
     # compaction swap (partition-preserving variant) — same windows
@@ -3266,38 +3265,6 @@ def _fsck_state_locked(spark, state_dir: str) -> dict:
         "swept": swept,
         "needs_rebuild": needs_rebuild,
     }
-
-
-def _fsck_first(spark, state_dir: str, op: str) -> dict:
-    """The fsck-first contract every maintenance verb shares with
-    :func:`rebuild_state`, run AFTER the verb holds the maintenance
-    lock: repair any crashed stage (:func:`fsck_state`) BEFORE the
-    verb reads the snapshot set, and REFUSE while anything needs a
-    rebuild.
-
-    Without it the maintenance verbs compose unsafely across a crash:
-    :func:`coalesce_snapshots` would merge a mid-surgery snapshot
-    (transient duplicates, retracted ids still present) into an epoch
-    and delete the source — after which fsck SWEEPS the committed
-    surgery stage (its ``batches/{name}`` no longer exists), baking
-    the duplicates in and silently undoing the takedown; symmetrically,
-    :func:`retract_documents` run between a coalesce crash and its
-    fsck would do surgery on the partial snapshot set, and the later
-    fsck would adopt the PRE-retraction staged epoch, resurrecting
-    the retracted ids with no marker left to flag it.  Repair-first
-    closes both directions; the refusal mirrors
-    :func:`_retract_fast`'s marker check (a half-applied fast
-    retraction only reconsolidates through a rebuild)."""
-    report = _fsck_state_locked(spark, state_dir)
-    if report["needs_rebuild"]:
-        raise RuntimeError(
-            f"{op} on {state_dir} refused: a crashed fast retraction "
-            f"left {sorted(report['needs_rebuild'])} needing a rebuild "
-            f"— running {op} now would bake its partial mutations into "
-            "the state; run rebuild_state first (it reconsolidates "
-            "every table and clears the markers)"
-        )
-    return report
 
 
 # bucket-balance ratio (max bucket rows / mean bucket rows) above

@@ -18,10 +18,15 @@ from pyspark.sql import functions as F
 from hadoop__spark.operators.ingest import (
     _INGEST_MARKER,
     _STALE_MARKER,
+    coalesce_snapshots,
     compact_state,
+    decontaminate_state,
     fsck_state,
     ingest_batch,
+    maintain_state,
+    rebuild_sketch_states,
     rebuild_state,
+    refit_ivf_index,
     retract_documents,
     state_summary,
 )
@@ -706,8 +711,6 @@ def test_decontaminate_state_retroactive(spark, tmp_path):
     probe-visible planes), no-ops on a re-run, and the same benchmark
     held in later ingest_batch calls keeps the leak out going
     forward."""
-    from hadoop__spark.operators.ingest import decontaminate_state
-
     state = str(tmp_path / "state")
 
     def docs(ids):
@@ -799,7 +802,6 @@ def test_rebuild_sketch_states_targeted_repair(spark, tmp_path):
     the text/embedding plane files are untouched byte-for-byte — no
     re-sign, no IVF refit."""
     from hadoop__spark.operators import corpus
-    from hadoop__spark.operators.ingest import rebuild_sketch_states
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     _build_state(spark, a, BATCHES)
@@ -904,8 +906,6 @@ def test_rebuild_sketch_states_edges(spark, tmp_path):
     """The targeted repair refuses legacy (pre-policy) states by
     name, no-ops when the policy enables no sketch state, and leaves
     the gate stale when scores are withheld."""
-    from hadoop__spark.operators.ingest import rebuild_sketch_states
-
     # legacy state: policy table removed
     state = str(tmp_path / "legacy")
     ingest_batch(spark, state, _docs(spark, range(1, 6)), "b1")
@@ -943,7 +943,6 @@ def test_retract_repair_sketches_one_call(spark, tmp_path):
     (fast retract, then rebuild_sketch_states).  Withholding scores
     on a gated corpus refuses BEFORE any destructive rewrite."""
     from hadoop__spark.operators import corpus
-    from hadoop__spark.operators.ingest import rebuild_sketch_states
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     _build_state(spark, a, BATCHES)
@@ -1026,7 +1025,6 @@ def test_decontaminate_repair_sketches_one_call(spark, tmp_path):
     repair: a retroactive takedown on an accounted corpus ends with
     nothing stale and the accounting equal to the retained corpus."""
     from hadoop__spark.operators import corpus
-    from hadoop__spark.operators.ingest import decontaminate_state
 
     state = str(tmp_path / "state")
 
@@ -1502,7 +1500,6 @@ def test_refit_ivf_index(spark, tmp_path, monkeypatch):
     stage; post-marker with the swap not started swept (an interim
     ingest may have appended — the refit is lost, never the data)."""
     from hadoop__spark.operators import ingest as ing
-    from hadoop__spark.operators.ingest import refit_ivf_index
 
     state = str(tmp_path / "state")
     admitted = _build_state(spark, state, BATCHES)
@@ -1637,8 +1634,6 @@ def test_maintain_state_refit_advice(spark, tmp_path):
     max/mean ratio crosses the threshold the centroid re-fit runs
     inside the same lock hold, the compact step skips the IVF table
     the refit just rewrote, and the corpus/membership are unchanged."""
-    from hadoop__spark.operators.ingest import maintain_state
-
     state = str(tmp_path / "state")
     admitted = _build_state(spark, state, BATCHES)
     assigned = f"{state}/ivf/assigned"
@@ -2024,8 +2019,6 @@ def test_refit_output_is_compact_equivalent(spark, tmp_path):
     rewrite in the same window (judge r13 item 3)."""
     import pyarrow.parquet as pq
 
-    from hadoop__spark.operators.ingest import refit_ivf_index
-
     state = str(tmp_path / "state")
     admitted = _build_state(spark, state, BATCHES)
     assigned = f"{state}/ivf/assigned"
@@ -2065,3 +2058,170 @@ def test_refit_output_is_compact_equivalent(spark, tmp_path):
                 os.path.join(root, f), columns=["doc_id"]
             ).column("doc_id").to_pylist()
             assert ids == sorted(ids), f"{root}/{f} not id-sorted"
+
+
+def test_rebuild_sketch_states_finishes_crashed_surgery_first(
+    spark, tmp_path, monkeypatch
+):
+    """rebuild_sketch_states runs fsck-first like every other
+    lock-taking verb: a snapshot surgery that crashed after moving its
+    staged replacement files in, but before deleting the hit files
+    they supersede, holds both — counted as-is, group_counts would
+    overstate the corpus by the hit files' rows.  The fsck pass under
+    the lock finishes the surgery first, so the rebuilt cap totals
+    equal the snapshots' row count."""
+    from hadoop__spark.operators import ingest as ingest_mod
+    from hadoop__spark.operators.ingest import _read_snapshots_union
+
+    state = str(tmp_path / "state")
+    ingest_batch(
+        spark, state, _docs(spark, range(1, 10)), "b1",
+        group_cap=("src", 50),
+    )
+    ingest_batch(
+        spark, state, _docs(spark, range(10, 20)), "b2",
+        group_cap=("src", 50),
+    )
+    victims = spark.createDataFrame([(3,), (12,)], "doc_id LONG")
+
+    real_delete = ingest_mod._delete_path
+
+    def crash_on_first_hit_file_delete(spark_, path):
+        if "/batches/" in path and path.endswith(".parquet"):
+            raise RuntimeError("simulated crash before hit-file delete")
+        return real_delete(spark_, path)
+
+    monkeypatch.setattr(
+        ingest_mod, "_delete_path", crash_on_first_hit_file_delete
+    )
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        retract_documents(spark, state, victims, mode="rebuild")
+    monkeypatch.setattr(ingest_mod, "_delete_path", real_delete)
+    # the crash left b1 mid-surgery: staged rows moved in, hit file
+    # still present beside them
+    assert table_exists(
+        spark, f"{state}/tmp/retract/b1/_SURGERY_MANIFEST"
+    )
+
+    out = rebuild_sketch_states(spark, state)
+    assert out["rebuilt"] == ["group_counts"]
+    total = (
+        spark.read.parquet(f"{state}/group_counts")
+        .agg(F.sum("n_admitted")).first()[0]
+    )
+    kept = [r.doc_id for r in _read_snapshots_union(spark, state).collect()]
+    # b1 lost id 3; b2's surgery never staged, so it still holds 12
+    assert sorted(kept) == sorted(set(range(1, 20)) - {3})
+    assert total == len(kept) == 18
+    assert not table_exists(spark, f"{state}/tmp/retract/b1")
+    assert not table_exists(spark, f"{state}/_MAINTENANCE_LOCK")
+
+
+def _refusing_state(spark, state):
+    """A state that every lock-taking verb must refuse: a stored
+    policy with a cap and accounting column, one committed snapshot
+    (written locally, no ingest), and a crashed fast retraction's
+    _RETRACT_INPROGRESS marker."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop__spark.operators.ingest import (
+        _COMMIT_MARKER,
+        _RETRACT_MARKER,
+        _policy_row,
+        _write_policy,
+    )
+
+    _write_policy(
+        spark, state,
+        _policy_row(
+            "minhash", 3, 64, 0.8,
+            group_cap_col="src", group_cap_k=50, accounting_col="src",
+            has_quality_gate=False, has_embeddings=False,
+        ),
+    )
+    snap = f"{state}/batches/b1"
+    os.makedirs(snap)
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([1, 2], pa.int64()),
+            "text": ["first wholly unique text", "second unique text"],
+            "src": ["g", "h"],
+        }),
+        f"{snap}/part-00000.parquet",
+    )
+    for marker in (f"{snap}/_SUCCESS", f"{snap}/{_COMMIT_MARKER}",
+                   f"{state}/{_RETRACT_MARKER}"):
+        open(marker, "w").close()
+
+
+_LOCK_TAKING_VERBS = {
+    "compact": compact_state,
+    "coalesce": coalesce_snapshots,
+    "refit": refit_ivf_index,
+    "maintain": maintain_state,
+    "retract": lambda spark, st: retract_documents(
+        spark, st, spark.range(1).withColumnRenamed("id", "doc_id")
+    ),
+    "decontaminate": lambda spark, st: decontaminate_state(
+        spark, st, _docs(spark, [99])
+    ),
+    "rebuild_sketch_states": rebuild_sketch_states,
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_LOCK_TAKING_VERBS))
+def test_lock_taking_verbs_refuse_needing_rebuild(spark, tmp_path, verb):
+    """Every verb that takes the maintenance lock runs fsck first
+    under it and refuses while a crashed fast retraction needs a
+    rebuild — before reading anything — and releases the lock on the
+    refusal path."""
+    from hadoop__spark.operators.ingest import _MAINT_LOCK
+
+    state = str(tmp_path / "state")
+    _refusing_state(spark, state)
+    with pytest.raises(RuntimeError, match="needing a rebuild"):
+        _LOCK_TAKING_VERBS[verb](spark, state)
+    assert not table_exists(spark, f"{state}/{_MAINT_LOCK}")
+
+
+def test_policy_round_trip_and_drift_split(spark, tmp_path):
+    """The stored policy keeps NULL in its INT, DOUBLE and BOOLEAN
+    fields through the Arrow-built write and both reads, and the drift
+    check refuses exactly the enforced fields: each one alone is
+    reported; the query-time probe knobs never are."""
+    from hadoop__spark.operators.ingest import (
+        _policy_drift,
+        _read_policy,
+        _write_policy,
+    )
+
+    state = str(tmp_path / "state")
+    _write_policy(spark, state, {"text_method": "simhash"})
+    fast = _read_policy(spark, state)
+    assert fast == spark.read.parquet(f"{state}/policy").first().asDict()
+    assert fast["text_method"] == "simhash"
+    assert {k for k, v in fast.items() if v is not None} == {"text_method"}
+    for k in ("n", "threshold", "has_quality_gate", "semantic_threshold"):
+        assert k in fast  # INT, DOUBLE, BOOLEAN, DOUBLE columns exist
+
+    base = {
+        "text_method": "minhash", "n": 3, "num_perm": 64,
+        "threshold": 0.8, "max_hamming": 6, "n_chunks": 4, "bands": 16,
+        "has_quality_gate": True, "group_cap_col": "src",
+        "group_cap_k": 50, "accounting_col": "src",
+        "has_embeddings": True, "semantic_threshold": 0.95,
+    }
+    changed = {
+        "text_method": "simhash", "n": 4, "num_perm": 128,
+        "threshold": 0.7, "has_quality_gate": False,
+        "group_cap_col": "lang", "group_cap_k": 10,
+        "accounting_col": None, "has_embeddings": False,
+    }
+    for field, value in changed.items():
+        drift = _policy_drift(base, {**base, field: value})
+        assert [d.split(":")[0] for d in drift] == [field]
+    free = {"bands": 32, "max_hamming": 3, "n_chunks": 8,
+            "semantic_threshold": 0.9}
+    assert _policy_drift(base, {**base, **free}) == []
+    assert set(changed) | set(free) == set(base)
