@@ -22,20 +22,27 @@ Design differences from the reference (all deliberate):
   each query block resolves against its own FROM sources;
 * fresh analysis state per ``analyze`` call (the reference accumulates
   across ``parse()`` calls forever, README.md:108-129 — a wart);
-* ``spark.catalog`` replaces the Hive ``MetaDataDao``
+* the session catalog replaces the Hive ``MetaDataDao``
   (README.md:102, 239, 814) for ``SELECT *`` expansion and positional
   sink alignment;
 * multi-source provenance is stored as ``list[str]``; the reference's
   ``&``/``,`` string encodings (README.md:231, 1050) appear only in
   rendered output.
+
+JVM traffic scales with statements and tables, not with AST nodes or
+columns: each statement is parsed once and crosses py4j as one
+``toJSON()`` (``jbridge``), and each table lookup is one catalog
+metadata read that runs no Spark job (``SparkCatalogMetastore``).
 """
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass, field
 from typing import Protocol
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from hadoop__spark.plans.jbridge import Node, parse_statement
@@ -92,18 +99,27 @@ class Metastore(Protocol):
 
 
 class SparkCatalogMetastore:
-    """``spark.catalog`` as the metastore (replaces ``MetaDataDao``,
-    reference README.md:102, 239, 814)."""
+    """The session catalog as the metastore (replaces ``MetaDataDao``,
+    reference README.md:102, 239, 814): one metadata read per lookup,
+    the schema crossing py4j as one JSON string, and no Spark job
+    (``spark.catalog.listColumns`` runs small jobs and costs ~70 py4j
+    calls a table).  Temp views, permanent tables and views of the
+    session catalog resolve; tables of other (v2) catalogs do not."""
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
+        state = spark._jsparkSession.sessionState()  # noqa: SLF001
+        self._catalog = state.catalog()
+        self._parser = state.sqlParser()
 
     def columns(self, qualified_table: str) -> list[str] | None:
         for name in (qualified_table, qualified_table.split(".", 1)[-1]):
             try:
-                return [c.name for c in self.spark.catalog.listColumns(name)]
-            except Exception:
+                meta = self._catalog.getTempViewOrPermanentTableMetadata(
+                    self._parser.parseTableIdentifier(name)
+                )
+            except AnalysisException:  # no such table, or not a table name
                 continue
+            return [f["name"] for f in json.loads(meta.schema().json())["fields"]]
         return None
 
 

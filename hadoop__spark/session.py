@@ -3,8 +3,9 @@
 The reference tool resolved tables through a Hive metastore DAO
 (``MetaDataDao.getColumnByDBAndTable``, reference README.md:102,239,814).
 We have no Hive dependency: tables are parquet files registered as temp
-views, and ``spark.catalog`` serves every metadata lookup the lineage
-plane needs.
+views, and the session catalog serves every metadata lookup the lineage
+plane needs: one metadata read per table, no Spark job
+(``plans.lineage.SparkCatalogMetastore``).
 
 Scale notes (100 TB design intent, tested on local[N]):
 

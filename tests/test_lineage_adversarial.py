@@ -390,3 +390,114 @@ def test_with_wrapped_dir_insert_and_update(analyzer):
     assert res.output_tables == {"db.t2"}
     assert res.input_tables == {"db.src", "db.t2"}
     assert res.statements[-1] == "UPDATE"
+
+
+#: Spots where a plan's JSON form loses or nearly loses what the
+#: analyzer reads: a Seq[String] flattens to "[x, y]" (backquoted parts
+#: holding ", " or "]", lists past spark.sql.maxToStringFields), join
+#: types are bare objects, directory URIs are null, and literals,
+#: subqueries and opaque expressions render from source text the JSON
+#: does not carry.  Each expected output was captured from the
+#: getter-per-field bridge and must not change.
+_COLS30 = ", ".join(f"c{i:02d}" for i in range(1, 31))
+_WHERE_LIT = (
+    "'WHERE:((db.src.m = \"Cat\" and db.src.k > 1e3) "
+    "and db.src.a < date \\'2020-01-01\\')'"
+)
+JSON_LOSSY_SPOTS = {
+    "backquoted_names": (
+        "use db;insert into table dest select `x, y`, `p]q`.b from src `p]q`",
+        "inputTable:['db.src']\noutputTable:['db.dest']\n"
+        "ToTable:db.dest,ToNameParse:x, y,ToName:db.dest.x,FromName:db.src.x, y,Condition:[]\n"
+        "ToTable:db.dest,ToNameParse:b,ToName:None,FromName:db.src.b,Condition:[]",
+    ),
+    "qualified_star": (
+        "use db;select s.*, t2.c from src s join t2 on s.k = t2.c",
+        "inputTable:['db.src', 'db.t2']\noutputTable:[]\n" + "\n".join(
+            f"ToTable:TOK_TMP_FILE,ToNameParse:{c},ToName:None,FromName:db.{t}.{c},"
+            "Condition:['JOIN:db.src.k = db.t2.c']"
+            for t, c in [("src", "a"), ("src", "b"), ("src", "m"), ("src", "k"), ("t2", "c")]
+        ),
+    ),
+    "count_star": (
+        "use db;insert into table dest select count(*) from src where a > 0",
+        "inputTable:['db.src']\noutputTable:['db.dest']\n"
+        "ToTable:db.dest,ToNameParse:,ToName:db.dest.x,FromName:,"
+        "Condition:['COLFUN:count(*)', 'WHERE:db.src.a > 0']",
+    ),
+    "literals": (
+        "use db;select \"Cat\" as c1, 1e3 as c2, date '2020-01-01' as c3, "
+        "nvl(a, \"Cat\") as c4, concat(b, 1e3) as c5 from src "
+        "where m = \"Cat\" and k > 1e3 and a < date '2020-01-01'",
+        "inputTable:['db.src']\noutputTable:[]\n" + "\n".join(
+            f"ToTable:TOK_TMP_FILE,ToNameParse:{name},ToName:None,FromName:{src},"
+            f"Condition:[{colfun}, {_WHERE_LIT}]"
+            for name, src, colfun in [
+                ("c1", "", "'COLFUN:\"Cat\"'"),
+                ("c2", "", "'COLFUN:1e3'"),
+                ("c3", "", "\"COLFUN:date '2020-01-01'\""),
+                ("c4", "db.src.a", "'COLFUN:nvl(db.src.a,\"Cat\")'"),
+                ("c5", "db.src.b", "'COLFUN:concat(db.src.b,1e3)'"),
+            ]
+        ),
+    ),
+    "local_directory": (
+        "use db;insert overwrite local directory '/tmp/o' select a, b from src",
+        "inputTable:['db.src']\noutputTable:['/tmp/o']\n"
+        "ToTable:/tmp/o,ToNameParse:a,ToName:None,FromName:db.src.a,Condition:[]\n"
+        "ToTable:/tmp/o,ToNameParse:b,ToName:None,FromName:db.src.b,Condition:[]",
+    ),
+    "lateral_view": (
+        "use db;select a, x from src lateral view explode(m) ex as x",
+        "inputTable:['db.src']\noutputTable:[]\n"
+        "ToTable:TOK_TMP_FILE,ToNameParse:a,ToName:None,FromName:db.src.a,Condition:[]\n"
+        "ToTable:TOK_TMP_FILE,ToNameParse:x,ToName:None,FromName:db.src.m,Condition:[]",
+    ),
+    "using_natural_full_outer_joins": (
+        "use db;select a, z from src join src2 using (k);"
+        "select a, z from src natural join src2;"
+        "select a, c from src full outer join t2 on src.k = t2.c",
+        "inputTable:['db.src', 'db.src2', 'db.t2']\noutputTable:[]\n" + "\n".join(
+            f"ToTable:TOK_TMP_FILE,ToNameParse:{c},ToName:None,FromName:db.{t}.{c},"
+            f"Condition:['{tag}']"
+            for tag, pairs in [
+                ("JOIN:db.src.k = db.src2.k", [("src", "a"), ("src2", "z")] * 2),
+                ("FULLOUTERJOIN:db.src.k = db.t2.c", [("src", "a"), ("t2", "c")]),
+            ]
+            for t, c in pairs
+        ),
+    ),
+    "not_in_exists_scalar_subqueries": (
+        "use db;insert into table dest select (select max(c) from t2) from src "
+        "where k not in (select c from t2) "
+        "and exists (select 1 from t2 where t2.d = src.b)",
+        "inputTable:['db.src', 'db.t2']\noutputTable:['db.dest']\n"
+        "ToTable:db.dest,ToNameParse:,ToName:db.dest.x,FromName:db.t2.c,"
+        "Condition:['COLFUN:(select max(c) from t2)', "
+        "'WHERE:(db.src.k not in (select c from t2) "
+        "and exists (select 1 from t2 where t2.d = src.b))']",
+    ),
+    "quoted_comma_string_and_cast": (
+        "use db;select concat(a, \"p, q\") as s, cast(b as int) as i, a || b as ab from src",
+        "inputTable:['db.src']\noutputTable:[]\n"
+        "ToTable:TOK_TMP_FILE,ToNameParse:s,ToName:None,FromName:db.src.a,"
+        "Condition:['COLFUN:concat(db.src.a,\"p, q\")']\n"
+        "ToTable:TOK_TMP_FILE,ToNameParse:i,ToName:None,FromName:db.src.b,"
+        "Condition:['COLFUN:cast(b as int)']\n"
+        "ToTable:TOK_TMP_FILE,ToNameParse:ab,ToName:None,FromName:db.src.a,db.src.b,"
+        "Condition:['COLFUN:a || b']",
+    ),
+    "insert_column_list_past_max_to_string_fields": (
+        f"use db;insert into table dest ({_COLS30}) select {', '.join(['a'] * 30)} from src",
+        "inputTable:['db.src']\noutputTable:['db.dest']\n" + "\n".join(
+            f"ToTable:db.dest,ToNameParse:a,ToName:db.dest.c{i:02d},FromName:db.src.a,Condition:[]"
+            for i in range(1, 31)
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("spot", sorted(JSON_LOSSY_SPOTS))
+def test_json_lossy_spots_keep_their_output(analyzer, spot):
+    script, expected = JSON_LOSSY_SPOTS[spot]
+    assert analyzer.analyze(script).format() == expected
